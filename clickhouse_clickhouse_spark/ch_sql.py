@@ -10224,11 +10224,14 @@ def ch_insert(spark: SparkSession, sql: str,
     [(cols)] FORMAT JSONEachRow|CSV|TSV|Values`` with the payload
     supplied separately (``data`` = a one-string-column DataFrame of
     lines, or a list of line strings — the clickhouse-client contract,
-    where FORMAT data follows the statement).
+    where FORMAT data follows the statement). A list payload goes in
+    through Arrow as a LocalRelation, so parsing and writing it run in
+    the JVM only, with no Python worker.
 
     Returns the typed rows to insert, parsed DISTRIBUTED via the format
     parsers in ``sources/render.py`` and cast against the target table's
-    catalog schema. The caller appends them (``append_to_view`` for temp
+    catalog schema (for a file-backed table, the DDL schema its view is
+    pinned to). The caller appends them (``append_to_view`` for temp
     views, ``.write.insertInto`` for warehouse tables) — same separation
     as the reference's parse-then-squash insert pipeline (upstream
     src/Interpreters/InterpreterInsertQuery.cpp)."""
@@ -10284,8 +10287,7 @@ def ch_insert(spark: SparkSession, sql: str,
                              "lines passed separately (client contract) "
                              "or inline after the statement")
         if isinstance(data, list):
-            data = spark.createDataFrame([(ln,) for ln in data],
-                                         "line string")
+            data = _arrow_columns(spark, [data], "line string")
         else:
             data = data.toDF("line")
     if fmt not in ("Values", "JSONEachRow", "CSV", "TSV", "TabSeparated"):
@@ -10774,7 +10776,7 @@ def ch_create_table(spark: SparkSession, sql: str) -> TableSpec:
             raise ValueError(f"layout key {key!r} is not a column "
                              f"(expressions in PARTITION BY/ORDER BY are "
                              f"not supported here — pre-compute a column)")
-    spark.createDataFrame([], schema).createOrReplaceTempView(spec.name)
+    _arrow_frame(spark, [], schema).createOrReplaceTempView(spec.name)
     return spec
 
 
@@ -10782,8 +10784,9 @@ def insert_into_table(spark: SparkSession, spec: TableSpec,
                       rows: DataFrame, path: str | None = None) -> None:
     """INSERT honoring the DDL's layout: with a ``path``, write
     partitioned+sorted parquet (MergeTree part shape) and re-register the
-    view over the files; without, append to the in-memory view (Memory
-    engine)."""
+    view over the files, read with ``spec.schema`` pinned (nothing is
+    inferred, so no job reads a footer and partition values keep their
+    DDL type); without, append to the in-memory view (Memory engine)."""
     if path is None or spec.engine.lower() in ("memory", "null"):
         if spec.engine.lower() != "null":
             append_to_view(spark, spec.name, rows)
@@ -10794,10 +10797,70 @@ def insert_into_table(spark: SparkSession, spec: TableSpec,
 
     insert_partitioned(rows, path, partition_by=spec.partition_by,
                        sort_by=spec.order_by, mode="append")
-    spark.read.parquet(path).createOrReplaceTempView(spec.name)
+    _register_files(spark, spec, path)
+
+
+def _register_files(spark: SparkSession, spec: TableSpec,
+                    path: str) -> None:
+    """(Re-)register a file-backed table's view over its parquet parts,
+    with the DDL schema pinned."""
+    from clickhouse_clickhouse_spark.sources.write import read_table
+
+    read_table(spark, path, spec.schema).createOrReplaceTempView(spec.name)
+
+
+def _alter_spec_columns(spark: SparkSession, name: str,
+                        view_schema) -> None:
+    """Carry an ADD/DROP COLUMN into the table's recorded DDL: keep the
+    DDL fields still in the view, then append the view's new ones. The
+    DDL schema is what a file-backed table's view is re-read with after
+    each INSERT or OPTIMIZE, so without this an added column (whose
+    values the next INSERT writes to the parts) would vanish from the
+    view again, and a dropped one would come back."""
+    spec = _SPECS.get((id(spark), name.lower()))
+    if spec is None:
+        return
+    from pyspark.sql import types as T
+
+    kept = [f for f in spec.schema.fields if f.name in view_schema.names]
+    known = {f.name for f in kept}
+    spec.schema = T.StructType(
+        kept + [f for f in view_schema.fields if f.name not in known])
+    _remember_spec(spark, spec)
 
 
 # ----------------------------------------------------------- statements
+
+def _arrow_frame(spark: SparkSession, rows: list[tuple],
+                 schema) -> DataFrame:
+    """Rows held in Python — a statement's status rows, a new table's
+    empty contents — as a DataFrame fed through Arrow (see
+    ``_arrow_columns``). ``schema`` is a DDL string or a StructType."""
+    from pyspark.sql import types as T
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    return _arrow_columns(spark, list(zip(*rows)) or [()] * len(schema),
+                          schema)
+
+
+def _arrow_columns(spark: SparkSession, columns, schema) -> DataFrame:
+    """One Python sequence per field of ``schema`` (a DDL string or a
+    StructType) as a DataFrame fed through Arrow. ``createDataFrame``
+    casts the Arrow table to ``schema``, which is kept as given,
+    nullability included. The result is a LocalRelation: it is scanned
+    in the JVM and collected without a job, where a list-fed
+    ``createDataFrame`` pickles the rows into an RDD that starts Python
+    workers on every evaluation."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    table = pa.Table.from_arrays([pa.array(c) for c in columns],
+                                 names=schema.fieldNames())
+    return spark.createDataFrame(table, schema)
+
 
 # DDL registry for SHOW CREATE TABLE (session-keyed, like the reference's
 # metadata store)
@@ -10836,8 +10899,8 @@ def ch_statement(spark: SparkSession, sql: str,
             name, _, val = item.partition("=")
             settings[name.strip()] = val.strip().strip("'\"")
         applied = apply_ch_settings(spark, settings)
-        return spark.createDataFrame(
-            [(k, conf, val) for k, (conf, val) in applied.items()],
+        return _arrow_frame(
+            spark, [(k, conf, val) for k, (conf, val) in applied.items()],
             "setting string, spark_conf string, value string")
     if kw == "SYSTEM":
         sm = re.match(r"SYSTEM\s+REFRESH\s+VIEW\s+(\w+)$",
@@ -10848,8 +10911,8 @@ def ch_statement(spark: SparkSession, sql: str,
                 raise ValueError(f"{name!r} is not a refreshable "
                                  "materialized view")
             n = _do_refresh(spark, name)
-            return spark.createDataFrame([(name, n)],
-                                         "refreshed string, rows long")
+            return _arrow_frame(spark, [(name, n)],
+                                "refreshed string, rows long")
         raise ValueError("unsupported SYSTEM statement (SYSTEM REFRESH "
                          "VIEW <name> is)")
     if kw == "CREATE":
@@ -10869,8 +10932,8 @@ def ch_statement(spark: SparkSession, sql: str,
             if len(set(params)) != len(params):
                 raise ValueError("CREATE FUNCTION: duplicate parameter")
             _SQL_UDFS[name] = (params, fm.group("b").strip())
-            return spark.createDataFrame(
-                [(name, len(params))], "function string, arity int")
+            return _arrow_frame(
+                spark, [(name, len(params))], "function string, arity int")
         if re.match(r"CREATE\s+FUNCTION\b", sql.strip(),
                     re.IGNORECASE):
             raise ValueError(
@@ -10943,8 +11006,8 @@ def ch_statement(spark: SparkSession, sql: str,
                         f"dictionary {name!r} already exists — "
                         "DROP DICTIONARY first or use IF NOT EXISTS")
                 d = _DICTIONARIES[name.lower()]
-                return spark.createDataFrame(
-                    [(name, d["table"], d["key"])],
+                return _arrow_frame(
+                    spark, [(name, d["table"], d["key"])],
                     "dictionary string, source_table string, key string")
             _DICTIONARIES[name.lower()] = {
                 "table": tm.group(1), "key": key,
@@ -10953,8 +11016,8 @@ def ch_statement(spark: SparkSession, sql: str,
                 "layout": layout, "rmin": rmin, "rmax": rmax,
                 "parent": parent}
             _DICT_GEN[0] += 1          # invalidate the translate memo
-            return spark.createDataFrame(
-                [(name, tm.group(1), key)],
+            return _arrow_frame(
+                spark, [(name, tm.group(1), key)],
                 "dictionary string, source_table string, key string")
         mvm = re.match(
             r"CREATE\s+MATERIALIZED\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
@@ -10988,9 +11051,9 @@ def ch_statement(spark: SparkSession, sql: str,
             }
             n = _do_refresh(spark, name)   # initial refresh (reference
                                            # behavior: runs on create)
-            return spark.createDataFrame(
-                [(name, mvm.group("to") or name,
-                  int(mvm.group("rn")) * _REFRESH_UNITS[unit], n)],
+            return _arrow_frame(
+                spark, [(name, mvm.group("to") or name,
+                         int(mvm.group("rn")) * _REFRESH_UNITS[unit], n)],
                 "name string, target string, interval_s long, rows long")
         if mvm:
             # Batch MATERIALIZED VIEW (upstream StorageMaterializedView):
@@ -11014,7 +11077,7 @@ def ch_statement(spark: SparkSession, sql: str,
             try:
                 spark.table(target)
             except Exception:
-                spark.createDataFrame([], transformed.schema) \
+                _arrow_frame(spark, [], transformed.schema) \
                     .createOrReplaceTempView(target)
             _MATVIEWS.setdefault(source.lower(), []).append(
                 (mv, target, tsql))
@@ -11027,8 +11090,8 @@ def ch_statement(spark: SparkSession, sql: str,
                 # late-bound as the target re-registers on each insert
                 spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {mv} "
                           f"AS SELECT * FROM {target}")
-            return spark.createDataFrame(
-                [(mv, target, source, populate)],
+            return _arrow_frame(
+                spark, [(mv, target, source, populate)],
                 "name string, target string, source string, "
                 "populated boolean")
         vm = re.match(
@@ -11045,8 +11108,8 @@ def ch_statement(spark: SparkSession, sql: str,
             _register_udfs(spark)
             spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW "
                       f"{vm.group('v')} AS {translate(vm.group('q'))}")
-            return spark.createDataFrame([(vm.group("v"), "View")],
-                                         "name string, engine string")
+            return _arrow_frame(spark, [(vm.group("v"), "View")],
+                                "name string, engine string")
         cm = re.match(
             r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<t>\w+)\s+"
             r"ENGINE\s*=\s*(?P<e>\w+)(?:\([^)]*\))?\s*"
@@ -11078,23 +11141,27 @@ def ch_statement(spark: SparkSession, sql: str,
                 import os as _os
                 spec.path = _os.path.join(data_dir, spec.name)
             _remember_spec(spark, spec)
-        return spark.createDataFrame(
-            [(spec.name, spec.engine, ",".join(spec.partition_by),
-              ",".join(spec.order_by))],
+        return _arrow_frame(
+            spark, [(spec.name, spec.engine, ",".join(spec.partition_by),
+                     ",".join(spec.order_by))],
             "name string, engine string, partition_by string, "
             "order_by string")
     if kw == "INSERT":
         rows = ch_insert(spark, sql, data)
         m = _INSERT_RE.match(sql)
-        spec = _SPECS.get((id(spark), m.group("table").lower()))
+        table = m.group("table")
+        spec = _SPECS.get((id(spark), table.lower()))
         if spec is not None and spec.path:
-            n = rows.count()
             insert_into_table(spark, spec, rows, spec.path)
-            return spark.createDataFrame([(m.group("table"), n)],
-                                         "table string, written long")
-        append_to_view(spark, m.group("table"), rows)
-        return spark.createDataFrame([(m.group("table"), rows.count())],
-                                     "table string, written long")
+        else:
+            append_to_view(spark, table, rows)
+        # every format parser is a 1:1 projection of the payload lines,
+        # so a list payload's row count is its length: the rows are
+        # evaluated once, by the write
+        n = len(data) if m.group("fmt") and isinstance(data, list) \
+            else rows.count()
+        return _arrow_frame(spark, [(table, n)],
+                            "table string, written long")
     if kw == "DESCRIBE" or kw == "DESC":
         rest = sql.strip().split(None, 1)[1].strip().rstrip(";")
         if rest.upper().startswith("TABLE "):
@@ -11112,7 +11179,7 @@ def ch_statement(spark: SparkSession, sql: str,
             t = spark.table(rest)
         rows = [(f.name, spark_type_to_ch(f.dataType, f.nullable))
                 for f in t.schema.fields]
-        return spark.createDataFrame(rows, "name string, type string")
+        return _arrow_frame(spark, rows, "name string, type string")
     if kw == "SHOW":
         rest = sql.strip()[4:].strip().rstrip(";")
         if rest.upper().startswith("TABLES"):
@@ -11138,7 +11205,7 @@ def ch_statement(spark: SparkSession, sql: str,
                 stmt += f"\nPARTITION BY ({', '.join(spec.partition_by)})"
             if spec.order_by:
                 stmt += f"\nORDER BY ({', '.join(spec.order_by)})"
-            return spark.createDataFrame([(stmt,)], "statement string")
+            return _arrow_frame(spark, [(stmt,)], "statement string")
         fm = re.match(r"FUNCTIONS(?:\s+LIKE\s+'([^']*)')?$", rest,
                       re.IGNORECASE)
         if fm:
@@ -11157,8 +11224,8 @@ def ch_statement(spark: SparkSession, sql: str,
         if first == "SYNTAX":
             # the reference's EXPLAIN SYNTAX shows the rewritten query —
             # here that IS the dialect translation
-            return spark.createDataFrame(
-                [(translate(rest.split(None, 1)[1]),)],
+            return _arrow_frame(
+                spark, [(translate(rest.split(None, 1)[1]),)],
                 "rewritten_query string")
         variants = {"ESTIMATE": "EXPLAIN COST",
                     "PIPELINE": "EXPLAIN FORMATTED",
@@ -11171,16 +11238,17 @@ def ch_statement(spark: SparkSession, sql: str,
                 plan = routed._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode
                     .fromString("formatted"))
-                return spark.createDataFrame(
-                    [("== Answered from aggregate projection ==\n"
-                      + plan,)], "plan string")
+                return _arrow_frame(
+                    spark, [("== Answered from aggregate projection ==\n"
+                             + plan,)], "plan string")
             return spark.sql(f"{variants[first]} {translate(body)}")
         joined = _try_strictness_join(spark, rest, None)
         if joined is not None:
             plan = joined._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
                 .fromString("simple"))
-            return spark.createDataFrame(
+            return _arrow_frame(
+                spark,
                 [("== Strictness join (operator route) ==\n" + plan,)],
                 "plan string")
         routed = _try_projection_route(spark, rest)
@@ -11188,7 +11256,8 @@ def ch_statement(spark: SparkSession, sql: str,
             plan = routed._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
                 .fromString("simple"))
-            return spark.createDataFrame(
+            return _arrow_frame(
+                spark,
                 [("== Answered from aggregate projection ==\n" + plan,)],
                 "plan string")
         return spark.sql(f"EXPLAIN {translate(rest)}")
@@ -11197,7 +11266,7 @@ def ch_statement(spark: SparkSession, sql: str,
         if name.upper().startswith("TABLE "):
             name = name.split(None, 1)[1]
         ok = spark.catalog.tableExists(name)
-        return spark.createDataFrame([(1 if ok else 0,)], "result int")
+        return _arrow_frame(spark, [(1 if ok else 0,)], "result int")
     if kw == "DROP":
         fdm = re.match(r"DROP\s+FUNCTION\s+(?:IF\s+EXISTS\s+)?(\w+)",
                        sql.strip().rstrip(";"), re.IGNORECASE)
@@ -11207,8 +11276,8 @@ def ch_statement(spark: SparkSession, sql: str,
                                              re.IGNORECASE):
                 raise ValueError(
                     f"DROP FUNCTION: {fdm.group(1)!r} does not exist")
-            return spark.createDataFrame(
-                [(fdm.group(1), dropped)],
+            return _arrow_frame(
+                spark, [(fdm.group(1), dropped)],
                 "function string, dropped boolean")
         ddm = re.match(r"DROP\s+DICTIONARY\s+(?:IF\s+EXISTS\s+)?(\w+)",
                        sql.strip().rstrip(";"), re.IGNORECASE)
@@ -11216,8 +11285,8 @@ def ch_statement(spark: SparkSession, sql: str,
             dropped = _DICTIONARIES.pop(ddm.group(1).lower(),
                                         None) is not None
             _DICT_GEN[0] += 1          # invalidate the translate memo
-            return spark.createDataFrame(
-                [(ddm.group(1), dropped)],
+            return _arrow_frame(
+                spark, [(ddm.group(1), dropped)],
                 "dictionary string, dropped boolean")
         mm = re.match(r"DROP\s+(?:TABLE|VIEW)\s+(?:IF\s+EXISTS\s+)?(\w+)",
                       sql.strip(), re.IGNORECASE)
@@ -11238,7 +11307,7 @@ def ch_statement(spark: SparkSession, sql: str,
                                   if t[0].lower() != mm.group(1).lower()]
             if not _MATVIEWS[src_tbl]:
                 del _MATVIEWS[src_tbl]
-        return spark.createDataFrame([(mm.group(1),)], "dropped string")
+        return _arrow_frame(spark, [(mm.group(1),)], "dropped string")
     if kw == "ALTER":
         from pyspark.sql import functions as F
 
@@ -11266,16 +11335,19 @@ def ch_statement(spark: SparkSession, sql: str,
             dt, _ = parse_ch_type(om.group(2).strip())
             out = base.withColumn(om.group(1), F.lit(None).cast(dt))
             out.createOrReplaceTempView(name)
+            _alter_spec_columns(spark, name, out.schema)
             _rebuild()
-            return spark.createDataFrame([(name, om.group(1))],
-                                         "table string, added string")
+            return _arrow_frame(spark, [(name, om.group(1))],
+                                "table string, added string")
         om = re.match(r"DROP\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(\w+)$",
                       op, re.IGNORECASE)
         if om:
-            base.drop(om.group(1)).createOrReplaceTempView(name)
+            out = base.drop(om.group(1))
+            out.createOrReplaceTempView(name)
+            _alter_spec_columns(spark, name, out.schema)
             _rebuild()
-            return spark.createDataFrame([(name, om.group(1))],
-                                         "table string, dropped string")
+            return _arrow_frame(spark, [(name, om.group(1))],
+                                "table string, dropped string")
         om = re.match(r"DELETE\s+WHERE\s+(.+)$", op,
                       re.IGNORECASE | re.DOTALL)
         if om:
@@ -11286,7 +11358,7 @@ def ch_statement(spark: SparkSession, sql: str,
             out = base.filter(f"NOT ({cond})")
             out.createOrReplaceTempView(name)
             _rebuild()
-            return spark.createDataFrame([(name,)], "mutated string")
+            return _arrow_frame(spark, [(name,)], "mutated string")
         om = re.match(r"UPDATE\s+(.+?)\s+WHERE\s+(.+)$", op,
                       re.IGNORECASE | re.DOTALL)
         if om:
@@ -11301,7 +11373,7 @@ def ch_statement(spark: SparkSession, sql: str,
                                 f"ELSE {col} END"))
             out.createOrReplaceTempView(name)
             _rebuild()
-            return spark.createDataFrame([(name,)], "mutated string")
+            return _arrow_frame(spark, [(name,)], "mutated string")
         om = re.match(r"ADD\s+PROJECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)"
                       r"\s*\(\s*SELECT\s+(.+?)\s+GROUP\s+BY\s+(.+?)\s*\)$",
                       op, re.IGNORECASE | re.DOTALL)
@@ -11337,8 +11409,8 @@ def ch_statement(spark: SparkSession, sql: str,
             s = SummaryTable(path, tuple(keys), measures)
             s.build(base)
             register_projection(name, pname, s)
-            return spark.createDataFrame(
-                [(name, pname, ",".join(keys), len(measures))],
+            return _arrow_frame(
+                spark, [(name, pname, ",".join(keys), len(measures))],
                 "table string, projection string, keys string, "
                 "measures int")
         om = re.match(r"DROP\s+PROJECTION\s+(?:IF\s+EXISTS\s+)?(\w+)$",
@@ -11349,8 +11421,8 @@ def ch_statement(spark: SparkSession, sql: str,
             )
 
             dropped = drop_projection(name, om.group(1))
-            return spark.createDataFrame(
-                [(name, om.group(1), bool(dropped))],
+            return _arrow_frame(
+                spark, [(name, om.group(1), bool(dropped))],
                 "table string, projection string, dropped boolean")
         raise ValueError(f"unsupported ALTER operation: {op!r}")
     if kw == "DELETE":
@@ -11371,7 +11443,7 @@ def ch_statement(spark: SparkSession, sql: str,
         )
 
         rebuild_projections(spark, mm.group("t"))
-        return spark.createDataFrame([(mm.group("t"),)], "mutated string")
+        return _arrow_frame(spark, [(mm.group("t"),)], "mutated string")
     if kw == "OPTIMIZE":
         mm = re.match(r"OPTIMIZE\s+TABLE\s+(\w+)(?:\s+FINAL)?"
                       r"(?:\s+(DEDUPLICATE)(?:\s+BY\s+(.+))?)?\s*$",
@@ -11392,8 +11464,7 @@ def ch_statement(spark: SparkSession, sql: str,
                     _rewrite,
                 )
                 _rewrite(spark, deduped, spec.path, spec.partition_by)
-                spark.read.parquet(spec.path) \
-                    .createOrReplaceTempView(name)
+                _register_files(spark, spec, spec.path)
             else:
                 deduped.createOrReplaceTempView(name)
             _forget_block_hashes(name)   # parts rewritten → block ids gone
@@ -11404,8 +11475,9 @@ def ch_statement(spark: SparkSession, sql: str,
                 optimize_compact,
             )
             optimize_compact(spark, spec.path, sort_by=spec.order_by,
-                             partition_by=spec.partition_by)
-            spark.read.parquet(spec.path).createOrReplaceTempView(name)
+                             partition_by=spec.partition_by,
+                             schema=spec.schema)
+            _register_files(spark, spec, spec.path)
         # merge-time projection maintenance (upstream: merges merge
         # projection parts): re-aggregating compacts the incremental
         # per-insert partials back to one row per key
@@ -11414,8 +11486,8 @@ def ch_statement(spark: SparkSession, sql: str,
         )
 
         n = rebuild_projections(spark, name)
-        return spark.createDataFrame(
-            [(name, bool(mm.group(2)), n)],
+        return _arrow_frame(
+            spark, [(name, bool(mm.group(2)), n)],
             "optimized string, deduplicated boolean, "
             "projections_compacted int")
     if kw == "RENAME":
@@ -11444,7 +11516,7 @@ def ch_statement(spark: SparkSession, sql: str,
                 spec.name = b
                 _remember_spec(spark, spec)
             moved.append((a, b))
-        return spark.createDataFrame(moved, "from string, to string")
+        return _arrow_frame(spark, moved, "from string, to string")
     if kw == "EXCHANGE":
         mm = re.match(r"EXCHANGE\s+TABLES\s+(\w+)\s+AND\s+(\w+)$",
                       sql.strip().rstrip(";"), re.IGNORECASE)
@@ -11471,19 +11543,19 @@ def ch_statement(spark: SparkSession, sql: str,
         if sb is not None:
             sb.name = a
             _remember_spec(spark, sb)
-        return spark.createDataFrame([(a, b)],
-                                     "exchanged string, with string")
+        return _arrow_frame(spark, [(a, b)],
+                            "exchanged string, with string")
     if kw == "TRUNCATE":
         mm = re.match(r"TRUNCATE\s+(?:TABLE\s+)?(\w+)", sql.strip(),
                       re.IGNORECASE)
         name = mm.group(1)
         schema = spark.table(name).schema
-        spark.createDataFrame([], schema).createOrReplaceTempView(name)
+        _arrow_frame(spark, [], schema).createOrReplaceTempView(name)
         _forget_block_hashes(name)
         from clickhouse_clickhouse_spark.plans.summary import (
             rebuild_projections,
         )
 
         rebuild_projections(spark, name)
-        return spark.createDataFrame([(name,)], "truncated string")
+        return _arrow_frame(spark, [(name,)], "truncated string")
     return ch_sql(spark, sql)

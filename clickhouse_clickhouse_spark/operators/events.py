@@ -114,10 +114,15 @@ def sessionize(df: DataFrame, entity: str, ts: str, gap_seconds: int) -> DataFra
     windowFunnel-style idioms; Spark has ``session_window`` in streaming —
     this is the batch equivalent): new session when the gap from the
     previous event exceeds ``gap_seconds``; session id = cumulative count
-    of session starts. Two stacked windows over one shuffle."""
+    of session starts. Two stacked windows over one shuffle. Gaps are
+    compared in microseconds, so a gap of 1800.11 s on a 1800 s
+    threshold starts a session (whole seconds would truncate it to
+    1800)."""
     w = Window.partitionBy(entity).orderBy(ts)
-    gap = F.col(ts).cast("long") - F.lag(F.col(ts).cast("long")).over(w)
-    is_new = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
+    us = F.unix_micros(F.col(ts))
+    gap = us - F.lag(us).over(w)
+    is_new = F.when(gap.isNull() | (gap > gap_seconds * 1_000_000),
+                    1).otherwise(0)
     return (df.withColumn("__new", is_new)
             .withColumn("session_id",
                         F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0)))

@@ -12,6 +12,10 @@ Reference mapping:
 - ``ALTER TABLE UPDATE/DELETE`` mutations (``MutationsInterpreter.cpp``) →
   read → transform → overwrite (rewrite-the-parts semantics, same as the
   reference; a lakehouse format would do this transactionally).
+
+``read_table`` reads a table directory. Given the table's DDL
+``schema`` it infers nothing; without one (a bare directory with no DDL)
+Spark infers the schema from the files.
 """
 
 from __future__ import annotations
@@ -20,6 +24,21 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def read_table(spark: SparkSession, path: str,
+               schema: T.StructType | None = None) -> DataFrame:
+    """The parquet parts under ``path`` as one DataFrame. With the table's
+    DDL ``schema`` it is pinned: no job reads a footer to infer it,
+    partition values keep their declared type (a String key ``007``
+    stays ``'007'``, where inference makes it the int 7), and the columns
+    come back in declaration order (inference puts partition columns
+    last)."""
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path) \
+        .select(*schema.fieldNames())
 
 
 def insert_partitioned(df: DataFrame, path: str,
@@ -50,12 +69,14 @@ def insert_partitioned(df: DataFrame, path: str,
 def optimize_compact(spark: SparkSession, path: str,
                      sort_by: Sequence[str] = (),
                      target_files: int = 1,
-                     partition_by: Sequence[str] = ()) -> None:
+                     partition_by: Sequence[str] = (),
+                     schema: T.StructType | None = None) -> None:
     """OPTIMIZE / background merge: rewrite the layout with fewer, sorted
     files. Stages through a temp dir then swaps (the poor-man's atomic
     rename the reference does per part). ``partition_by`` preserves the
-    table's partition-directory layout across the rewrite."""
-    df = spark.read.parquet(path)
+    table's partition-directory layout across the rewrite; ``schema``
+    (the DDL's) pins the read, so partition values keep their type."""
+    df = read_table(spark, path, schema)
     compacted = df.coalesce(target_files)
     if sort_by:
         compacted = compacted.sortWithinPartitions(*sort_by)

@@ -567,6 +567,60 @@ class TestStatements:
         ch_statement(spark, "ALTER TABLE alt_t DROP COLUMN note")
         assert "note" not in spark.table("alt_t").columns
 
+    def test_status_row_schemas(self, spark, tmp_path):
+        """DDL statements return their status row with the same schema as
+        a ``createDataFrame(rows, ddl)`` built from these DDL strings,
+        field for field and nullability included, and collecting it
+        runs no Spark job (the rows are an Arrow-fed LocalRelation)."""
+        from pyspark.sql import types as T
+
+        from clickhouse_clickhouse_spark.ch_sql import ch_statement
+
+        sc = spark.sparkContext
+        spark.conf.set("spark.clickhouse_clickhouse_spark.dataDir",
+                       str(tmp_path))
+        try:
+            created = ch_statement(
+                spark, "CREATE TABLE srs_f (k Int64, s String) "
+                       "ENGINE = MergeTree ORDER BY k")
+        finally:
+            spark.conf.set("spark.clickhouse_clickhouse_spark.dataDir", "")
+        cases = [
+            (created, "name string, engine string, partition_by string, "
+                      "order_by string", [("srs_f", "MergeTree", "", "k")]),
+        ]
+        for sql, data, ddl, want in [
+            ("INSERT INTO srs_f FORMAT JSONEachRow",
+             ['{"k": 1, "s": "a"}', '{"k": 2, "s": "b"}'],
+             "table string, written long", [("srs_f", 2)]),
+            ("CREATE TABLE srs_m (k Int64) ENGINE = Memory", None,
+             "name string, engine string, partition_by string, "
+             "order_by string", [("srs_m", "Memory", "", "")]),
+            ("INSERT INTO srs_m VALUES (1), (2), (3)", None,
+             "table string, written long", [("srs_m", 3)]),
+            ("OPTIMIZE TABLE srs_f FINAL", None,
+             "optimized string, deduplicated boolean, "
+             "projections_compacted int", [("srs_f", False, 0)]),
+            ("RENAME TABLE srs_m TO srs_m2", None,
+             "from string, to string", [("srs_m", "srs_m2")]),
+            ("TRUNCATE TABLE srs_m2", None, "truncated string",
+             [("srs_m2",)]),
+            ("DROP TABLE srs_m2", None, "dropped string", [("srs_m2",)]),
+        ]:
+            cases.append((ch_statement(spark, sql, data), ddl, want))
+        for i, (df, ddl, want) in enumerate(cases):
+            assert df.schema == T._parse_datatype_string(ddl), ddl
+            group = f"test_status_row_schemas_{i}"
+            sc.setJobGroup(group, group)
+            try:
+                got = [tuple(r) for r in df.collect()]
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert got == want, ddl
+            sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
     def test_system_tables_in_dialect(self, spark):
         from clickhouse_clickhouse_spark.ch_sql import ch_sql
 

@@ -71,6 +71,41 @@ def test_sessionize_gap(spark):
     assert [s for _, s in sessions] == [1, 1, 2, 2]
 
 
+def test_sessionize_fractional_gap_matches_oracle(spark):
+    """A gap of 1800.11 s on a 1800 s threshold starts a new session, as
+    in session_stats' DuckDB oracle, which compares fractional epochs.
+    Gaps in whole seconds truncated it to 1800: no new session."""
+    import duckdb
+
+    base = T(2024, 1, 1)
+    # gaps: user 1 1800.11 (new), 1799.89, exactly 1800, 1800.2 (new);
+    # user 2 1799.9, 1800.1 (new), 0.5
+    offsets = {1: [0, 1800.11, 3600, 5400, 7200.2],
+               2: [0, 1799.9, 3600, 3600.5]}
+    rows = [(u, i, base + datetime.timedelta(seconds=s))
+            for u, offs in offsets.items() for i, s in enumerate(offs)]
+    df = spark.createDataFrame(rows, "user_id long, i int, ts timestamp")
+    got = sorted((r.user_id, r.i, r.session_id)
+                 for r in sessionize(df, "user_id", "ts", 1800).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE ev (user_id BIGINT, i INT, ts TIMESTAMP)")
+    con.executemany("INSERT INTO ev VALUES (?, ?, ?)", rows)
+    want = sorted(con.execute("""
+        SELECT user_id, i,
+               sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+                              ROWS BETWEEN UNBOUNDED PRECEDING
+                              AND CURRENT ROW)
+        FROM (SELECT user_id, i, ts,
+                     CASE WHEN lag(ts) OVER w IS NULL
+                          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
+                     THEN 1 ELSE 0 END AS brk
+              FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts))
+        """).fetchall())
+    assert got == want
+    assert [s for u, _, s in got if u == 1] == [1, 2, 2, 2, 3]
+    assert [s for u, _, s in got if u == 2] == [1, 1, 2, 2]
+
+
 def test_funnel_hof_matches_cascade(spark, sf_dir):
     """Single-shuffle HOF funnel must agree with the oracle-checked
     cascade on the real fixture."""

@@ -289,3 +289,126 @@ def test_arrow_ipc_roundtrip(spark, sf_dir, tmp_path):
     back = read_any(spark, p, "arrow")
     assert sorted(map(str, back.collect())) == \
         sorted(map(str, o.collect()))
+
+
+DATA_DIR = "spark.clickhouse_clickhouse_spark.dataDir"
+
+
+def _create_file_backed(spark, tmp_path, ddl):
+    """CREATE a MergeTree table whose parts live under ``tmp_path``."""
+    from clickhouse_clickhouse_spark.ch_sql import ch_statement
+
+    spark.conf.set(DATA_DIR, str(tmp_path))
+    try:
+        ch_statement(spark, ddl)
+    finally:
+        spark.conf.set(DATA_DIR, "")
+
+
+def test_string_partition_key_keeps_its_type(spark, tmp_path):
+    """A String PARTITION BY key stays a string through INSERT, SELECT,
+    OPTIMIZE FINAL and a later INSERT, because every read of the table
+    directory uses the DDL schema. With the schema inferred, the view
+    read the key as an int ('007' came back as 7), the merge rewrote
+    ``code=007`` as ``code=7``, and a later key 'x9' was stored as
+    NULL."""
+    import os
+
+    from clickhouse_clickhouse_spark.ch_sql import ch_statement
+
+    _create_file_backed(spark, tmp_path,
+                        "CREATE TABLE pk_str (code String, v Int64) "
+                        "ENGINE = MergeTree PARTITION BY code ORDER BY v")
+
+    def rows():
+        return [tuple(r) for r in ch_statement(
+            spark, "SELECT code, v FROM pk_str ORDER BY v").collect()]
+
+    def insert(*pairs):
+        ch_statement(spark, "INSERT INTO pk_str FORMAT JSONEachRow",
+                     [f'{{"code": "{c}", "v": {v}}}' for c, v in pairs])
+
+    insert(("007", 1), ("42", 2))
+    assert rows() == [("007", 1), ("42", 2)]
+    ch_statement(spark, "OPTIMIZE TABLE pk_str FINAL").collect()
+    assert sorted(d for d in os.listdir(tmp_path / "pk_str")
+                  if d.startswith("code=")) == ["code=007", "code=42"]
+    assert rows() == [("007", 1), ("42", 2)]
+    insert(("x9", 3))
+    assert rows() == [("007", 1), ("42", 2), ("x9", 3)]
+    # the view is the DDL: its types, in declaration order (inference put
+    # the partition column last, so a positional VALUES insert bound its
+    # values to the wrong columns)
+    assert spark.table("pk_str").dtypes == [("code", "string"),
+                                             ("v", "bigint")]
+    ch_statement(spark, "INSERT INTO pk_str VALUES ('y1', 4)")
+    assert rows()[-1] == ("y1", 4)
+
+
+def test_insert_list_payload_job_budget(spark, tmp_path):
+    """A list-payload JSONEachRow INSERT into a file-backed table, status
+    row collected, runs at most two Spark jobs: the payload enters
+    through Arrow (no Python worker), the parsed rows are evaluated
+    once (by the partitioned write; ``written`` is the payload's
+    length), the view re-registers without inferring a schema, and the
+    status row is collected without a job. A malformed line parses to
+    an all-NULL row, so it is written and counted like any other."""
+    import json
+
+    from clickhouse_clickhouse_spark.ch_sql import ch_statement
+
+    _create_file_backed(spark, tmp_path,
+                        "CREATE TABLE ins_budget (k Int64, v Int64) "
+                        "ENGINE = MergeTree PARTITION BY k ORDER BY v")
+    lines = [json.dumps({"k": i % 5, "v": i}) for i in range(200)]
+    lines.insert(100, "{not json")
+    sc = spark.sparkContext
+    group = "test_insert_list_payload_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        got = ch_statement(spark, "INSERT INTO ins_budget FORMAT "
+                                  "JSONEachRow", lines).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert got == [Row(table="ins_budget", written=len(lines))]
+    assert len(jobs) <= 2, jobs
+    stored = spark.table("ins_budget")
+    assert stored.count() == len(lines)
+    assert stored.filter(F.col("v").isNull()).count() == 1
+
+
+
+def test_alter_columns_survive_file_backed_reread(spark, tmp_path):
+    """ALTER ADD/DROP COLUMN on a file-backed table changes its DDL
+    schema too, which the view is re-read with after every INSERT and
+    OPTIMIZE: an added column's inserted values read back, and a dropped
+    column stays dropped though its old values are still on disk."""
+    from clickhouse_clickhouse_spark.ch_sql import ch_statement
+
+    _create_file_backed(spark, tmp_path,
+                        "CREATE TABLE alt_files (k Int64, v Int64) "
+                        "ENGINE = MergeTree PARTITION BY k ORDER BY v")
+
+    def rows():
+        return [tuple(r) for r in ch_statement(
+            spark, "SELECT * FROM alt_files ORDER BY v").collect()]
+
+    ch_statement(spark, "INSERT INTO alt_files FORMAT JSONEachRow",
+                 ['{"k": 1, "v": 1}'])
+    ch_statement(spark, "ALTER TABLE alt_files ADD COLUMN note "
+                        "Nullable(String)")
+    ch_statement(spark, "INSERT INTO alt_files FORMAT JSONEachRow",
+                 ['{"k": 2, "v": 2, "note": "hi"}'])
+    assert rows() == [(1, 1, None), (2, 2, "hi")]
+    ch_statement(spark, "OPTIMIZE TABLE alt_files FINAL").collect()
+    assert rows() == [(1, 1, None), (2, 2, "hi")]
+    ch_statement(spark, "ALTER TABLE alt_files DROP COLUMN note")
+    ch_statement(spark, "INSERT INTO alt_files FORMAT JSONEachRow",
+                 ['{"k": 3, "v": 3}'])
+    assert spark.table("alt_files").columns == ["k", "v"]
+    assert rows() == [(1, 1), (2, 2), (3, 3)]
+    show = ch_statement(spark, "SHOW CREATE TABLE alt_files").first()[0]
+    assert "note" not in show
